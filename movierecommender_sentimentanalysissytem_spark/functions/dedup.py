@@ -323,6 +323,7 @@ def dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (a*x+b)%P lies in [0, P-1]. Measured (fresh-session interleaved
     # A/B, sf0.001): first-run 5.2-5.5 s -> 4.3-4.9 s, warm
     # 1.8-2.1 -> 1.6-1.8 s; identical plan shape otherwise.
+    # Needs size(w) >= 3 above: empty hvals would fold to the shared [P,...] sentinel.
     sig_fold = f"""
     aggregate(
       hvals,

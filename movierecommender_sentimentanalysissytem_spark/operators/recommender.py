@@ -524,12 +524,10 @@ _DIMSUM_SQRT_GAMMA = 100.0
 
 def dimsum_sampling_lineage(spark: SparkSession, sf_dir: str):
     """The DIMSUM key's capped-ratings → column-norm/threshold →
-    hash-kept-entry construction, factored out so the registered key
-    and the diagnostic sweep (scripts/dimsum_100x.py, which reports
-    keep%/saturation/pair-volume off this exact lineage) share ONE
-    definition — a constant or hash change here changes both, instead
-    of the script's stats silently drifting from the plan they claim
-    to describe (r10 ADVICE). Returns (capped ratings, probs, kept);
+    hash-kept-entry construction; its one caller is
+    rec_item_similarity_dimsum. Kept as a separate function so an ad-hoc
+    diagnostic (keep%/saturation/pair-volume) can read this exact
+    lineage instead of a copy. Returns (capped ratings, probs, kept);
     ratings and probs are scoped-persisted (ratings feeds both pair
     sides plus the norm aggregate; probs is referenced three times),
     so callers outside a registry sweep should release_scoped_caches()

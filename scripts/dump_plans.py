@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
 import sys
 
 EXPECT = {
@@ -38,9 +39,12 @@ EXPECT = {
 }
 
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
     from pyspark.sql import SparkSession
 
     from movierecommender_sentimentanalysissytem_spark import registry
@@ -74,7 +78,7 @@ def main() -> int:
         # keep the tree, drop the verbose per-node detail sections
         tree = plan.split("\n\n")[0]
         out += [f"## {key}", "", f"Expected: {note}.", "", "```", tree, "```", ""]
-    with open("PLANS.md", "w") as fh:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as fh:
         fh.write("\n".join(out))
     print(f"wrote PLANS.md ({len(EXPECT)} plans)")
     return 0

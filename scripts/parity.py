@@ -137,7 +137,7 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from movierecommender_sentimentanalysissytem_spark import registry
 
     spark = (

@@ -6,12 +6,13 @@ Usage: python scripts/plan_audit.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from pyspark.sql import SparkSession
 
     from movierecommender_sentimentanalysissytem_spark.plans.audit import (

@@ -10,12 +10,16 @@ Usage: python scripts/plan_fingerprints.py [sf_dir]
 from __future__ import annotations
 
 import json
+import os
 import sys
+
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
 
     from pyspark.sql import SparkSession
 
@@ -35,7 +39,7 @@ def main() -> int:
     )
     spark.sparkContext.setLogLevel("ERROR")
     fps = collect(spark, sf_dir)
-    with open("/root/repo/PLAN_FINGERPRINTS.json", "w") as fh:
+    with open(os.path.join(ROOT, "PLAN_FINGERPRINTS.json"), "w") as fh:
         json.dump(fps, fh, indent=1, sort_keys=True)
     n_err = sum(1 for v in fps.values() if "__error__" in v)
     print(f"{len(fps)} fingerprints written, {n_err} errors")

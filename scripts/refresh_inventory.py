@@ -6,12 +6,16 @@ Usage: python scripts/refresh_inventory.py
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def main() -> int:
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
     from movierecommender_sentimentanalysissytem_spark.registry import (
         _SECTION2,
         oracle_sql,
@@ -26,7 +30,7 @@ def main() -> int:
         doc = (fn.__doc__ or "").strip().split("\n")[0].rstrip(".")
         rows.append(f"| `{k}` | {doc} | {'SQL' if k in osql else 'rows'} |")
 
-    s = open("SURVEY.md").read()
+    s = open(os.path.join(ROOT, "SURVEY.md")).read()
     marker = "### 2.13 Extras beyond the mandated inventory"
     start = s.index(marker)
     end = s.index("**Inventory count:", start)
@@ -56,15 +60,20 @@ rows-only driver check with quality/recall tests in `tests/`).
         count=1,
         flags=re.S,
     )
-    open("SURVEY.md", "w").write(s)
+    open(os.path.join(ROOT, "SURVEY.md"), "w").write(s)
 
-    r = open("README.md").read()
+    r = open(os.path.join(ROOT, "README.md")).read()
     r = re.sub(
         r"\d+ registered query keys, \d+ SQL-checked exactly",
         f"{len(qs)} registered query keys, {len(osql)} SQL-checked exactly",
         r,
     )
-    open("README.md", "w").write(r)
+    r = re.sub(
+        r"The \d+ remaining(\s+)rows-only keys",
+        rf"The {len(qs) - len(osql)} remaining\1rows-only keys",
+        r,
+    )
+    open(os.path.join(ROOT, "README.md"), "w").write(r)
     print(f"{len(qs)} keys, {len(osql)} oracles, {len(extras)} extras")
     return 0
 

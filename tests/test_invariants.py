@@ -364,6 +364,30 @@ def test_lsh_pairs_band_row_uniqueness_contract(spark):
     assert (0, 0) not in got
 
 
+def test_minhash_skips_sub_three_word_docs(spark, tmp_path_factory):
+    """dedup_near_minhash's signature fold starts every doc at the
+    [P, ..., P] sentinel, so a doc with no 3-word shingle would share
+    its band keys with every other such doc. The size(w) >= 3 filter
+    keeps them out: on a corpus of duplicated empty, 1-word and 2-word
+    docs next to one near-duplicate pair, the key emits exactly that
+    pair (6 shared shingles of 8 -> jaccard 0.75)."""
+    out = str(tmp_path_factory.mktemp("minhash_short"))
+    text = "the quick brown fox jumps over the lazy dog"
+    texts = [
+        "", "",
+        "alpha", "alpha",
+        "beta gamma", "beta gamma",
+        text, text.replace("dog", "cat"),
+    ]
+    rows = [(i + 1, t, "en", "web", len(t)) for i, t in enumerate(texts)]
+    spark.createDataFrame(
+        rows, "doc_id long, text string, lang string, source string, n_chars long"
+    ).coalesce(1).write.mode("overwrite").parquet(f"{out}/documents.parquet")
+
+    got = [tuple(r) for r in QS["dedup_near_minhash"](spark, out).collect()]
+    assert got == [(7, 8, 0.75)]
+
+
 # Every literal filter constant whose semantics depend on the fixture
 # data domain, with its use sites. A driver fixture regeneration that
 # shrinks (or explodes) a column's domain must fail HERE, loudly,

@@ -16,52 +16,13 @@ def test_all_oracle_keys_have_queries():
 
 def test_surveyed_inventory_keys_present():
     """Every SURVEY.md §2 inventory key the engine claims must exist."""
-    qs = entrymod.queries()
-    required = [
-        # §2.1-2.2
-        "scan_parquet", "scan_projection_pushdown", "scan_csv", "scan_json",
-        "sink_parquet", "filter_simple", "filter_compound",
-        "project_expressions", "project_case", "cast_types",
-        # §2.3
-        "join_inner_equi", "join_star_multiway", "join_broadcast",
-        "join_left_outer", "join_right_outer", "join_full_outer",
-        "join_left_semi", "join_left_anti", "join_cross",
-        "join_theta_range", "join_asof", "join_self",
-        # §2.4
-        "agg_global", "agg_groupby", "agg_having", "agg_count_distinct",
-        "agg_approx_count_distinct", "agg_distinct", "agg_rollup",
-        "agg_cube", "agg_grouping_sets", "agg_pivot", "agg_filtered",
-        "agg_collect", "agg_percentile", "agg_stddev_var", "agg_corr",
-        # §2.5
-        "win_row_number_topk", "win_rank_dense", "win_lag_lead",
-        "win_running_sum", "win_moving_avg", "win_range_frame",
-        "win_ntile_percent", "win_first_last",
-        # §2.6-2.7
-        "sort_multikey", "limit_offset", "sample_deterministic",
-        "set_union_all", "set_union_distinct", "set_intersect", "set_except",
-        # §2.8
-        "fn_string", "fn_string_regexp", "fn_split_explode", "fn_date",
-        "fn_math", "fn_conditional", "fn_array", "fn_array_transform",
-        "fn_map_json", "fn_hash",
-        # §2.9
-        "text_wordcount", "text_top_terms", "text_stopword_removal",
-        "text_ngrams", "text_doclen_stats", "text_tfidf",
-        "text_lexicon_sentiment", "ml_sentiment_pipeline",
-        "ml_als_recommend", "ml_eval_rmse",
-        # §2.10
-        "dedup_exact", "dedup_near_minhash", "sim_cosine_pairwise",
-        "sim_topk_neighbors", "sim_threshold_join", "multimodal_columns",
-        "text_lang_partition_stats",
-        # §2.11
-        "stream_tumbling_window", "stream_sliding_window",
-        "stream_session_window", "stream_watermark_late", "stream_dedup",
-        "stream_stateful_counter",
-        # §2.12
-        "udf_python_scalar", "udf_pandas_vectorized", "udaf_pandas_grouped",
-        "udtf",
-    ]
-    missing = [k for k in required if k not in qs]
-    assert not missing, f"missing inventory keys: {missing}"
+    from movierecommender_sentimentanalysissytem_spark.registry import (
+        _SECTION2,
+    )
+
+    assert len(_SECTION2) == 89
+    missing = _SECTION2 - set(entrymod.queries())
+    assert not missing, f"missing inventory keys: {sorted(missing)}"
 
 
 def test_entry_smoke(spark):
@@ -71,135 +32,20 @@ def test_entry_smoke(spark):
     assert set(df.columns) == {"n_name", "revenue", "n_items"}
 
 
-def test_sweep_order_maximizes_new_driver_coverage():
-    """The driver's correctness sweep has a per-round key budget (50)
-    and walks queries() in dict order. The invariant — derived from the
-    SAME green-set constant the ordering uses, so this test cannot go
-    stale when new rounds are folded in: explicit priority keys lead,
-    then every key without a driver row sorts before every
-    already-checked key, so the unchecked∩first-50 set is maximal."""
-    from movierecommender_sentimentanalysissytem_spark.registry import (
-        _DRIVER_CHECKED,
-        _PRIORITY,
-        oracle_sql,
-        queries,
-    )
+def test_queries_return_registration_order():
+    """Registration order is the registry's only ordering rule:
+    queries() lists every key in the order its module registered it,
+    oracle_sql() lists the oracle-bearing subsequence of that order,
+    and repeated calls agree."""
+    from movierecommender_sentimentanalysissytem_spark import registry
 
-    order = list(queries())
-    # (0) explicit priority keys occupy the very front, in order
-    assert tuple(order[: len(_PRIORITY)]) == tuple(_PRIORITY)
-    # (1) no already-checked key may precede an unchecked key
-    rest = [k for k in order if k not in _PRIORITY]
-    first_checked = next(
-        (i for i, k in enumerate(rest) if k in _DRIVER_CHECKED), len(rest)
-    )
-    stragglers = [k for k in rest[first_checked:] if k not in _DRIVER_CHECKED]
-    assert not stragglers, f"unchecked keys sorted after checked ones: {stragglers}"
-    # (2) the 50-key budget is spent on maximal NEW signal: the first 50
-    # positions hold exactly every unchecked key outside the priority
-    # prefix (up to the budget left after that prefix).
-    unchecked_nonprio = [
-        k for k in order if k not in _DRIVER_CHECKED and k not in _PRIORITY
-    ]
-    want_new = min(50 - len(_PRIORITY), len(unchecked_nonprio))
-    got_new = sum(
-        1
-        for k in order[:50]
-        if k not in _DRIVER_CHECKED and k not in _PRIORITY
-    )
-    assert got_new == want_new, (
-        f"first 50 contains {got_new} unchecked non-priority keys, "
-        f"want exactly {want_new}"
-    )
-    # oracle dict must follow the same ordering contract
-    osql = list(oracle_sql())
-    assert osql == [k for k in order if k in set(osql)]
-
-
-def test_checked_tail_is_staleness_ordered():
-    """Once every key has a driver row, the budget left after the
-    unchecked head should re-verify the STALEST records first: within
-    the already-checked tail, a key last checked in round i must never
-    appear after a key last checked in round j > i. _PRIORITY keys
-    jump to the very front by design (rewritten since their last row),
-    so they are exempt."""
-    from movierecommender_sentimentanalysissytem_spark.registry import (
-        _PRIORITY,
-        _R1_DRIVER_CHECKED,
-        _R2_DRIVER_CHECKED,
-        _R3_DRIVER_CHECKED,
-        _R4_DRIVER_CHECKED,
-        _R5_DRIVER_CHECKED,
-        _R6_DRIVER_CHECKED,
-        _R7_DRIVER_CHECKED,
-        _R8_DRIVER_CHECKED,
-        _R9_DRIVER_CHECKED,
-        _R10_DRIVER_CHECKED,
-        _R11_DRIVER_CHECKED,
-        _R12_DRIVER_CHECKED,
-        _R13_DRIVER_CHECKED,
-        queries,
-    )
-
-    last = {}
-    for rnd, checked in enumerate(
-        (_R1_DRIVER_CHECKED, _R2_DRIVER_CHECKED,
-         _R3_DRIVER_CHECKED, _R4_DRIVER_CHECKED,
-         _R5_DRIVER_CHECKED, _R6_DRIVER_CHECKED,
-         _R7_DRIVER_CHECKED, _R8_DRIVER_CHECKED,
-         _R9_DRIVER_CHECKED, _R10_DRIVER_CHECKED, _R11_DRIVER_CHECKED,
-         _R12_DRIVER_CHECKED, _R13_DRIVER_CHECKED),
-        start=1,
-    ):
-        for k in checked:
-            last[k] = rnd
-    seq = [last[k] for k in queries() if k in last and k not in _PRIORITY]
-    assert seq == sorted(seq), "checked tail not staleness-ordered"
-
-
-def test_continuation_keys_queue_behind_first_wave():
-    """Newer debut tiers (_NEW_R5B, then _NEW_R7, then _NEW_R7B) must
-    not displace longer-waiting unchecked keys from the 50-key driver
-    budget: as long as ≥50 older unchecked keys exist, the first 50
-    contain no newer-tier keys (module import order would otherwise
-    interleave them in), and the unchecked block orders as
-    pre-R5B → R5B → R7 → R7B."""
-    from movierecommender_sentimentanalysissytem_spark.registry import (
-        _DRIVER_CHECKED,
-        _NEW_R5B,
-        _NEW_R7,
-        _NEW_R7B,
-        _NEW_R7C,
-        _PRIORITY,
-        queries,
-    )
-
-    # _PRIORITY keys jump the waiting-tier ordering by design (forced
-    # re-checks / pre-emptive fixes), so they are exempt here.
-    unchecked = [
-        k
-        for k in queries()
-        if k not in _DRIVER_CHECKED and k not in _PRIORITY
-    ]
-    newer = _NEW_R5B | _NEW_R7 | _NEW_R7B | _NEW_R7C
-    older = [k for k in unchecked if k not in newer]
-    if len(older) >= 50:
-        assert not [k for k in unchecked[:50] if k in newer]
-    # tier ordering: the unchecked block is pre-R5B keys, then R5B,
-    # then R7, then R7B, then R7C — each tier contiguous
-    def tier(k):
-        if k in _NEW_R7C:
-            return 4
-        if k in _NEW_R7B:
-            return 3
-        if k in _NEW_R7:
-            return 2
-        if k in _NEW_R5B:
-            return 1
-        return 0
-
-    tiers = [tier(k) for k in unchecked]
-    assert tiers == sorted(tiers), "unchecked block not tier-ordered"
+    registry._load_all_modules()
+    order = list(registry.QUERIES)
+    assert list(registry.queries()) == order
+    osql = registry.oracle_sql()
+    assert list(osql) == [k for k in order if k in registry.ORACLES]
+    assert list(registry.queries()) == order
+    assert list(registry.oracle_sql()) == list(osql)
 
 
 @pytest.mark.slow
@@ -261,33 +107,6 @@ def test_order_sensitive_keys_exist_in_registry():
         k.startswith(("sample_", "scan_ignore_corrupt"))
         for k in ORDER_SENSITIVE
     ), "unexpected family in ORDER_SENSITIVE — document why it is exempt"
-
-
-def test_expensive_tier_keys_exist_in_registry():
-    """_EXPENSIVE (the sweep-budget cost tier: keys measured ≥ ~2 s at
-    sf0.01, sorted after cheap keys within their priority group) must
-    stay tied to the registry exactly like ORDER_SENSITIVE: every entry
-    names a registered key, so a rename/removal goes red here instead
-    of silently de-prioritizing nothing while the real key drifts back
-    into the cheap tier (r10 verdict item 6)."""
-    from movierecommender_sentimentanalysissytem_spark.registry import (
-        _EXPENSIVE,
-        queries,
-    )
-
-    unknown = _EXPENSIVE - set(queries())
-    assert not unknown, f"_EXPENSIVE names unregistered keys: {unknown}"
-    # Every expensive key is one of the documented cost families: model
-    # training, true streaming runs, ANN index builds, iterative graph
-    # plans, the CF/recommender self-joins, connected components, or
-    # the python-datasource round-trips. A new family must be
-    # documented at the constant.
-    families = (
-        "ml_", "stream_", "sim_", "dedup_clusters", "rec_", "graph_",
-        "scan_python_datasource", "sink_python_datasource",
-    )
-    stray = [k for k in _EXPENSIVE if not k.startswith(families)]
-    assert not stray, f"undocumented family in _EXPENSIVE: {stray}"
 
 
 def test_recall_artifact_covers_exactly_the_rows_only_keys():
