@@ -97,37 +97,21 @@ def _quiesce() -> dict:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     quiesce = _quiesce()
     try:
         sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", ""))
     except ValueError:
         sf = -1.0
 
-    from pyspark.sql import SparkSession
+    from movierecommender_sentimentanalysissytem_spark.session import spark_session
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("mrsas-bench")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        # fixtures are single ~25 MB parquet files; the default 128 MB
-        # split size would scan them in ONE task — split small so the
-        # scan parallelizes across local cores (at production scale the
-        # input is many files and the default is right)
-        .config("spark.sql.files.maxPartitionBytes", "16m")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", "16g")
-        # Measurement-only (r15): the per-query task-time probe below
-        # reads summed executorRunTime from the status store; the
-        # default 1000-stage retention is within one bench run's reach
-        # (~500 stages), and eviction between two snapshots would
-        # corrupt a delta. No effect on query plans or timings.
-        .config("spark.ui.retainedStages", "5000")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    # Measurement-only (r15): the per-query task-time probe below
+    # reads summed executorRunTime from the status store; the default
+    # 1000-stage retention is within one bench run's reach (~500
+    # stages), and eviction between two snapshots would corrupt a
+    # delta. No effect on query plans or timings.
+    spark = spark_session("mrsas-bench", **{"spark.ui.retainedStages": "5000"})
+    cpus = spark.sparkContext.defaultParallelism
 
     from movierecommender_sentimentanalysissytem_spark import registry
 
@@ -156,7 +140,7 @@ def main() -> None:
     # normalized comparison, so it must be stable).
     def _calib_run() -> float:
         t = time.perf_counter()
-        spark.range(0, 100_000_000, 1, int(cpus)).selectExpr(
+        spark.range(0, 100_000_000, 1, cpus).selectExpr(
             "sum(id * 3 + 7) AS s"
         ).collect()
         return time.perf_counter() - t
@@ -254,7 +238,7 @@ def main() -> None:
                 "queries": timings,
                 "value_best2": round(sum(timings_best2.values()), 3),
                 "queries_best2": timings_best2,
-                "cpus": int(cpus),
+                "cpus": cpus,
                 "queries_task_sec": task_sec,
                 "task_time_note": (
                     "queries_task_sec sums executorRunTime of each "

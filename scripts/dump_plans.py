@@ -45,19 +45,10 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     sys.path.insert(0, ROOT)
-    from pyspark.sql import SparkSession
-
     from movierecommender_sentimentanalysissytem_spark import registry
+    from movierecommender_sentimentanalysissytem_spark.session import spark_session
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = spark_session("dump_plans")
     qs = registry.queries()
 
     out = [

@@ -84,6 +84,7 @@ shape list for reproducing historical seeds, default = latest)
 
 from __future__ import annotations
 
+import os
 import random
 import sys
 
@@ -1374,31 +1375,10 @@ def main() -> int:
         )
         return 2
 
-    from pyspark.sql import SparkSession
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    from movierecommender_sentimentanalysissytem_spark.session import spark_session
 
-    import os
-
-    # FUZZ_AQE / FUZZ_SHUFFLE_PARTITIONS mirror parity.py's
-    # PARITY_* knobs (r12's config-robustness axis): every swept
-    # query's agreement should be invariant to the physical-plan
-    # regime (adaptive re-planning on/off, odd shuffle fan-out).
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("fuzz-differential")
-        .config(
-            "spark.sql.shuffle.partitions",
-            os.environ.get("FUZZ_SHUFFLE_PARTITIONS", "8"),
-        )
-        .config(
-            "spark.sql.adaptive.enabled",
-            os.environ.get("FUZZ_AQE", "true"),
-        )
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = spark_session("fuzz-differential")
     failures = run_differential(
         spark, sf_dir, [(seed, k) for k in range(n)], only_shape
     )

@@ -41,6 +41,9 @@ from pyspark.sql import SparkSession
 from movierecommender_sentimentanalysissytem_spark.registry import (  # noqa: E402
     ORDER_SENSITIVE,
 )
+from movierecommender_sentimentanalysissytem_spark.session import (  # noqa: E402
+    spark_session,
+)
 
 
 def build_dir_copy(spark: SparkSession, src: str, out: str, parts: int = 3) -> None:
@@ -60,19 +63,7 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = sys.argv[2:]
     out = f"/tmp/layout_smoke_{os.path.basename(sf_dir.rstrip('/'))}"
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.driver.memory", "16g")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.ui.enabled", "false")
-        .appName("layout_smoke")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = spark_session("layout_smoke")
 
     if not os.path.exists(os.path.join(out, "lineitem.parquet")):
         t0 = time.time()

@@ -13,22 +13,14 @@ import sys
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    from pyspark.sql import SparkSession
-
     from movierecommender_sentimentanalysissytem_spark.plans.audit import (
         SKIP,
         audit_plans,
     )
     from movierecommender_sentimentanalysissytem_spark.registry import queries
+    from movierecommender_sentimentanalysissytem_spark.session import spark_session
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = spark_session("plan_audit")
 
     flags = audit_plans(spark, sf_dir)
     for f in flags:

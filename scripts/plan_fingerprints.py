@@ -21,23 +21,12 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     sys.path.insert(0, ROOT)
 
-    from pyspark.sql import SparkSession
-
     from movierecommender_sentimentanalysissytem_spark.plans.fingerprint import (
         collect,
     )
+    from movierecommender_sentimentanalysissytem_spark.session import spark_session
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("plan-fingerprints")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = spark_session("plan-fingerprints")
     fps = collect(spark, sf_dir)
     with open(os.path.join(ROOT, "PLAN_FINGERPRINTS.json"), "w") as fh:
         json.dump(fps, fh, indent=1, sort_keys=True)

@@ -291,15 +291,9 @@ def main() -> int:
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "RECALL.json",
     )
-    from pyspark.sql import SparkSession
+    from movierecommender_sentimentanalysissytem_spark.session import spark_session
 
-    spark = (
-        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "8g")
-        .appName("quality_report")
-        .getOrCreate()
-    )
+    spark = spark_session("quality_report")
     try:
         report = build_report(spark)
     finally:

@@ -30,6 +30,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from movierecommender_sentimentanalysissytem_spark.session import spark_session
+
 SF_DIR = "/root/testdata/sf0.1"
 
 # Keys whose scale behavior this smoke pins, with the growth axis the
@@ -152,25 +154,7 @@ def main() -> None:
     replicas = int(sys.argv[1]) if len(sys.argv) > 1 else 10
     keys = tuple(sys.argv[2:]) or KEYS
     out = f"/tmp/scale_smoke_{replicas}x"
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.driver.memory", "16g")
-        .config("spark.sql.adaptive.enabled", "true")
-        # align with bench.py (round 8): the 1x fixtures are ONE file
-        # per table while the replicated corpus is 32 — without the
-        # small split size the 1x scan stage serializes on one core
-        # and scan-bound keys report flattering sub-1x "blowups"
-        # (graph_pagerank measured 0.8x under the old config, 2.0x
-        # aligned)
-        .config("spark.sql.files.maxPartitionBytes", "16m")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.ui.enabled", "false")
-        .appName("scale_smoke")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = spark_session("scale_smoke")
 
     if not os.path.exists(f"{out}/lineitem.parquet"):
         t0 = time.time()

@@ -8,8 +8,8 @@ records. This is the local[] stand-in for the Spark UI's stage table
 going to" without a live UI.
 
 Usage: python scripts/stage_profile.py <key> [key ...]
-Env:   SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-       SPARK_GRAFT_CPUS (default 32)
+Env:   SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1); cores and
+       heap follow the shared session policy (``session.py``)
 """
 
 from __future__ import annotations
@@ -32,29 +32,20 @@ def main() -> int:
         print("usage: stage_profile.py <key> [key ...]", file=sys.stderr)
         return 2
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     shutil.rmtree(EVDIR, ignore_errors=True)
     os.makedirs(EVDIR, exist_ok=True)
 
-    from pyspark.sql import SparkSession
+    from movierecommender_sentimentanalysissytem_spark.session import spark_session
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("mrsas-stage-profile")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.files.maxPartitionBytes", "16m")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "16g")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", EVDIR)
-        .config("spark.eventLog.compress", "false")
-        .config("spark.eventLog.rolling.enabled", "false")
-        .getOrCreate()
+    spark = spark_session(
+        "mrsas-stage-profile",
+        **{
+            "spark.eventLog.enabled": "true",
+            "spark.eventLog.dir": EVDIR,
+            "spark.eventLog.compress": "false",
+            "spark.eventLog.rolling.enabled": "false",
+        },
     )
-    spark.sparkContext.setLogLevel("ERROR")
 
     from movierecommender_sentimentanalysissytem_spark import registry
 

@@ -21,26 +21,15 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
+from movierecommender_sentimentanalysissytem_spark.session import (  # noqa: E402
+    spark_session,
+)
 
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     only = sys.argv[2:]
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.driver.memory", "16g")
-        .config("spark.sql.adaptive.enabled", "true")
-        # align with bench.py (round 8): without the small split size
-        # the single-file fixtures scan in 1-2 tasks and scan-bound
-        # keys rank ~2-3x worse here than under the bench config
-        .config("spark.sql.files.maxPartitionBytes", "16m")
-        .appName("timing_audit")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = spark_session("timing_audit")
 
     from movierecommender_sentimentanalysissytem_spark import registry
 

@@ -28,25 +28,12 @@ SF_TENTH = "/root/testdata/sf0.1"
 
 @pytest.fixture(scope="session")
 def spark():
-    from pyspark.sql import SparkSession
+    from movierecommender_sentimentanalysissytem_spark.session import spark_session
 
-    s = (
-        SparkSession.builder.master("local[8]")
-        .appName("mrsas-tests")
-        # Explicit heap: with no spark-defaults.conf the driver JVM
-        # falls back to 1g, which the full suite rides right at the
-        # edge of — r12 saw the shared JVM OOM (GCLocker retry →
-        # executor heap exhaustion in a hash-agg spill) on the dimsum
-        # drift pins, killing every later test with ConnectionRefused.
-        # parity.py / bench.py / quality_report.py already size their
-        # sessions (8-16g); the host has 128 GiB.
-        .config("spark.driver.memory", "8g")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    s.sparkContext.setLogLevel("ERROR")
+    # The repo's one session policy: local[$SPARK_GRAFT_CPUS] and a
+    # driver heap of half the host's RAM. The 1g default heap is not
+    # enough: r12 saw the shared JVM OOM (GCLocker retry -> executor
+    # heap exhaustion in a hash-agg spill) on the dimsum drift pins,
+    # killing every later test with ConnectionRefused.
+    s = spark_session("mrsas-tests")
     yield s

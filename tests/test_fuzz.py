@@ -48,10 +48,31 @@ def test_fixed_seed_block_agrees(spark):
     assert not failures, "\n".join(failures)
 
 
-def test_second_seed_block_agrees(spark):
-    failures = fz.run_differential(
-        spark, SF_SMALL, [(1, k) for k in range(20)]
-    )
+@pytest.mark.parametrize(
+    "regime",
+    [
+        {},
+        {
+            "spark.sql.adaptive.enabled": "false",
+            "spark.sql.shuffle.partitions": "7",
+        },
+    ],
+    ids=["session-default", "aqe-off-7-partitions"],
+)
+def test_second_seed_block_agrees(spark, regime):
+    """Agreement must not depend on the physical-plan regime: the
+    session default, and adaptive re-planning off with an odd shuffle
+    fan-out (r12's config-robustness axis)."""
+    saved = {key: spark.conf.get(key) for key in regime}
+    try:
+        for key, value in regime.items():
+            spark.conf.set(key, value)
+        failures = fz.run_differential(
+            spark, SF_SMALL, [(1, k) for k in range(20)]
+        )
+    finally:
+        for key, value in saved.items():
+            spark.conf.set(key, value)
     assert not failures, "\n".join(failures)
 
 

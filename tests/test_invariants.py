@@ -468,20 +468,17 @@ def test_fixture_domain_list_matches_source():
 
 
 @pytest.mark.slow
-def test_threshold_coupled_keys_nonempty_at_oracle_sf():
+def test_threshold_coupled_keys_nonempty_at_oracle_sf(spark):
     """Several round-5 keys couple a semantic threshold to the fixture
     distribution (confidence >= 0.2, co-buy count >= 5, Levenshtein
     <= 3, grid radius 2, PMI vocabulary top-30). A fixture
     regeneration could silently empty these results while the
     hash-vs-oracle check stays green (both sides equally empty) —
     coverage would thin without a red signal. Pin non-emptiness at the
-    oracle SF so the failure mode is loud instead. (The bounded spark
-    fixture from conftest is reused; each query is a few seconds.)"""
-    from pyspark.sql import SparkSession
-
+    oracle SF so the failure mode is loud instead. (Each query is a few
+    seconds.)"""
     from tests.conftest import SF_ORACLE
 
-    spark = SparkSession.getActiveSession() or SparkSession.builder.getOrCreate()
     for key in (
         "rec_association_rules",
         "join_fuzzy_levenshtein",

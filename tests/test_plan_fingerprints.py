@@ -11,6 +11,7 @@ and commit the JSON diff — the diff is the review artifact.
 from __future__ import annotations
 
 import json
+from pathlib import Path
 
 import pytest
 
@@ -19,7 +20,7 @@ from movierecommender_sentimentanalysissytem_spark.plans.fingerprint import (
 )
 from tests.conftest import SF_SMALL
 
-with open("/root/repo/PLAN_FINGERPRINTS.json") as fh:
+with open(Path(__file__).resolve().parent.parent / "PLAN_FINGERPRINTS.json") as fh:
     STORED = json.load(fh)
 
 # Strategy-bearing representatives: every join algorithm, the cached /
