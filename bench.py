@@ -169,10 +169,16 @@ def main() -> None:
     # while the executor-parallel component does — task_time is the
     # parallelism-sensitive metric that makes the $SPARK_GRAFT_CPUS
     # contract observable. Purely additive; `value`/`queries`
-    # first-run wall semantics are unchanged.
+    # first-run wall semantics are unchanged. The status store is fed
+    # by the async listener bus, so each snapshot first drains it:
+    # otherwise a stage that completed just before the snapshot lands
+    # in the next query's delta. Both snapshots sit outside the timed
+    # window.
     def _task_time_ms() -> int:
         try:
-            ss = spark.sparkContext._jsc.sc().statusStore()
+            sc = spark.sparkContext._jsc.sc()
+            sc.listenerBus().waitUntilEmpty()
+            ss = sc.statusStore()
             jvm = spark._jvm
             gw = spark.sparkContext._gateway
             stages = ss.stageList(

@@ -29,8 +29,7 @@ from pyspark.sql.window import Window
 
 from movierecommender_sentimentanalysissytem_spark.functions.rounding import round4
 from movierecommender_sentimentanalysissytem_spark.plans.caching import (
-    release_local_checkpoint,
-    scoped_local_checkpoint,
+    drop_checkpoint,
     scoped_persist,
 )
 from movierecommender_sentimentanalysissytem_spark.registry import query
@@ -292,8 +291,9 @@ def dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Compact cache: hashed shingle SET per doc — the only state the
     # signature branch and both Jaccard-verify sides need.
-    # NOTE (r14): a chained-materialization variant (hv eager=False,
-    # populated through m's count — one job instead of two) measured
+    # NOTE (r14): a chained-materialization variant (hv persisted lazily
+    # — an option scoped_persist no longer has — and populated through
+    # m's count: one job instead of two) measured
     # 1.81 -> 1.65 s warm at sf0.1 with identical output, but the one
     # full bench run carrying it hung in this query with every stage-
     # task failing "Block rdd_N does not exist" under heavy host load
@@ -757,10 +757,10 @@ def min_label_components(pairs: DataFrame, max_rounds: int = 10) -> DataFrame:
     component hundreds of docs long (drifting boilerplate in a web
     corpus) converges inside the round bound where plain propagation
     would silently return wrong labels (pinned on a crafted 40-chain
-    in tests/test_operators.py). Each round is two shuffle joins; at
-    100 TB intermediate labels would be checkpointed every few rounds
-    to cut lineage. Cache hygiene: holds ≤1 label generation persisted
-    at any time."""
+    in tests/test_operators.py). Each round is two shuffle joins plus
+    one local checkpoint that cuts the lineage. Cache hygiene: holds ≤1
+    label generation persisted at any time; the returned generation
+    stays alive until Spark's ContextCleaner finds it unreferenced."""
     sym = scoped_persist(
         pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
         .unionByName(
@@ -768,20 +768,18 @@ def min_label_components(pairs: DataFrame, max_rounds: int = 10) -> DataFrame:
         )
         .distinct()
     )
-    # sym is materialized by scoped_persist's eager count BEFORE the
-    # first checkpoint, so its cache-buffer RDD is never mis-attributed
-    # to a generation's capture set (see scoped_local_checkpoint's
-    # attribution note) — the in-loop early release below must never
-    # drop the edge cache.
     # Each generation is eagerly local-checkpointed: the jump step
     # references the label frame twice, so WITHOUT lineage truncation
     # the logical plan doubles per round and analysis OOMs the driver
     # around round ~8 — the checkpoint keeps every round's plan
-    # constant-size (see plans/caching.py::scoped_local_checkpoint).
-    labels = scoped_local_checkpoint(
+    # constant-size. localCheckpoint stores partitions in the executors'
+    # block managers (no distributed-FS round trip); at 100 TB,
+    # reliable checkpoint(dir) swaps in for executor-loss tolerance.
+    labels = (
         sym.select(F.col("a").alias("node"))
         .distinct()
         .withColumn("root", F.col("node"))
+        .localCheckpoint(eager=True)
     )
     for _ in range(max_rounds):
         neighbor_min = (
@@ -804,13 +802,15 @@ def min_label_components(pairs: DataFrame, max_rounds: int = 10) -> DataFrame:
         lut = prop.select(
             F.col("node").alias("r_node"), F.col("root").alias("r_root")
         )
-        new_labels = scoped_local_checkpoint(
-            prop.join(lut, prop.root == F.col("r_node"), "left").select(
+        new_labels = (
+            prop.join(lut, prop.root == F.col("r_node"), "left")
+            .select(
                 "node",
                 F.least(
                     F.col("root"), F.coalesce(F.col("r_root"), F.col("root"))
                 ).alias("root"),
             )
+            .localCheckpoint(eager=True)
         )
         changed = (
             new_labels.alias("n")
@@ -824,7 +824,7 @@ def min_label_components(pairs: DataFrame, max_rounds: int = 10) -> DataFrame:
         # dead weight — drop both before looping (≤1 label generation
         # alive at any time).
         prop.unpersist()
-        release_local_checkpoint(labels)
+        drop_checkpoint(labels)
         labels = new_labels
         if changed == 0:
             break

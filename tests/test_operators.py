@@ -339,29 +339,40 @@ def test_min_label_components_raises_when_round_bound_too_small(spark):
 
 
 def test_min_label_components_holds_one_generation(spark):
-    """The loop's early release must keep at most ONE label generation's
-    checkpoint RDDs persisted at exit (plus the edge cache), no matter
-    how many rounds ran — the ≤1-generation property the docstring and
-    SCALE.md claim."""
+    """The loop drops every superseded label generation at once, so at
+    exit the only new persistent RDD is the final generation's
+    checkpoint, however many rounds ran. The next registry build must
+    not destroy it — its lineage is gone, so the returned frame would
+    fail — and drop_checkpoint frees it."""
     from movierecommender_sentimentanalysissytem_spark.functions.dedup import (
         min_label_components,
     )
     from movierecommender_sentimentanalysissytem_spark.plans.caching import (
+        drop_checkpoint,
         release_scoped_caches,
     )
 
     release_scoped_caches()
     jsc = spark.sparkContext._jsc.sc()
-    baseline = jsc.getPersistentRDDs().size()
+
+    def persistent_ids() -> set[int]:
+        ids, it = set(), jsc.getPersistentRDDs().keysIterator()
+        while it.hasNext():
+            ids.add(it.next())
+        return ids
+
+    before = persistent_ids()
     edges = [(i + 1, i) for i in range(100, 140)]  # 6+ rounds
     df = spark.createDataFrame(edges, "doc_a long, doc_b long")
     labels = min_label_components(df)
-    labels.collect()
-    # live now: the FINAL generation's checkpoint only (sym + prop are
-    # Dataset-unpersisted in the loop; superseded checkpoints released)
-    assert jsc.getPersistentRDDs().size() - baseline <= 2
+    final = labels._jdf.queryExecution().analyzed().rdd().id()
+    assert persistent_ids() - before == {final}
     release_scoped_caches()
-    assert jsc.getPersistentRDDs().size() <= baseline
+    assert final in persistent_ids()
+    assert labels.count() == 41
+    assert {r.root for r in labels.collect()} == {100}
+    drop_checkpoint(labels)
+    assert not persistent_ids() - before
 
 
 def test_python_datasource_partition_contract():

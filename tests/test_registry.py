@@ -60,7 +60,7 @@ def test_no_array_or_map_outputs_on_oracle_keys(spark):
     sort_array(...))`` idiom), never raw. Most builders are lazy
     (schema only, no job), but a handful run eager actions during
     construction (e.g. dedup_clusters' connected-components loop
-    counts and checkpoints), so the full ~324-key sweep costs ~100 s
+    counts and checkpoints), so the full 339-key sweep costs ~100 s
     at sf0.001 — the price of covering the whole driver-crash class
     with zero exemptions."""
     from pyspark.sql.types import (
